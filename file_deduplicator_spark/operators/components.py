@@ -112,14 +112,18 @@ def _release_checkpoint(df: DataFrame) -> None:
     (local)checkpoint blocks — those hang off the RDD. Left alone they are
     only reclaimed when a driver GC lets the ContextCleaner run, which on a
     large quiet heap can be never (measured as sporadic multi-second stalls
-    in later rounds)."""
+    in later rounds). Plain cached frames are unpersisted. A JVM-side
+    failure (e.g. the session already stopped) is ignored: the blocks die
+    with the context."""
+    from py4j.protocol import Py4JError
+
     jrdd = getattr(df, "_fds_ckpt_rdd", None)
     try:
         if jrdd is not None:
             jrdd.unpersist(False)
         else:
             df.unpersist()
-    except Exception:
+    except Py4JError:
         pass
 
 
@@ -233,6 +237,7 @@ def connected_components(
     id_b: str = "id_b",
     verbose: bool = False,
     driver_threshold: int = 2_000_000,
+    materialized: bool = False,
 ) -> tuple[DataFrame, dict]:
     """Return (labels, metrics): labels = (id, cluster_id) for every node that
     appears in an edge; cluster_id = min node id in the component.
@@ -246,10 +251,16 @@ def connected_components(
     min-label + pointer-jumping loop below runs fully distributed. The
     threshold is a driver-memory bound (~100 MB at the default), not a
     correctness bound; set 0 to force the distributed path.
+
+    ``materialized``: ``edges`` is already a _detached_checkpoint frame
+    with one row per (id_a, id_b), owned by the caller — it is read as is
+    (no second distinct or checkpoint) and not released here.
     """
     # materialize the (directed) edge list once — the distributed loop
     # re-joins it every round, and its size decides the strategy
-    ed = _detached_checkpoint(edges.select(F.col(id_a), F.col(id_b)).distinct())
+    ed = edges.select(F.col(id_a), F.col(id_b))
+    if not materialized:
+        ed = _detached_checkpoint(ed.distinct())
     n_edges = ed.count()  # cheap on the checkpointed frame
     if n_edges <= driver_threshold:
         pdf = ed.toPandas()  # Arrow path
@@ -259,7 +270,8 @@ def connected_components(
             pdf[id_a].tolist(), pdf[id_b].tolist(), spark,
             f"id {id_type}, cluster_id {id_type}",
         )
-        _release_checkpoint(ed)
+        if not materialized:
+            _release_checkpoint(ed)
         return labels, {
             "iterations": 0,
             "converged": True,
@@ -272,7 +284,8 @@ def connected_components(
     # co-located in a partition collapse to stars before any global barrier,
     # cutting the iterative phase's round count (see _local_contraction)
     contracted = _detached_checkpoint(_local_contraction(ed, id_a, id_b))
-    _release_checkpoint(ed)
+    if not materialized:
+        _release_checkpoint(ed)
 
     sym = (
         contracted.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))

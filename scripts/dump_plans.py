@@ -2,7 +2,8 @@
 
 Usage: python scripts/dump_plans.py <suffix> [query,query,...]
 Writes plans/r06/<query>_<suffix>.txt for each bench doc query, plus the
-pipeline's report/clustered plans (the two frames bench.py acts on).
+pipeline's report/clustered plans (the two frames bench.py acts on) and its
+pairs plan (the frame the job's pairs sink writes).
 """
 
 from __future__ import annotations
@@ -73,6 +74,9 @@ def main() -> None:
         )
         (OUT / f"clips_dedup_pipeline_clustered_{suffix}.txt").write_text(
             explain_str(res["clustered"])
+        )
+        (OUT / f"clips_dedup_pipeline_pairs_{suffix}.txt").write_text(
+            explain_str(res["pairs"])
         )
         release_pipeline(res)
         print("wrote clips_dedup_pipeline", flush=True)
